@@ -142,8 +142,10 @@ object Ann {
     // trees per row (CodegenFallback — see cosineFloatUdf). Bit-identical
     // to the declarative formulation: same per-centroid left-fold dot,
     // each dot rounded exactly as Spark's Round on DoubleType does
-    // (java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP)), first-max
-    // tie-break replicating array_position(arr, array_max(arr)).
+    // (java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP), NaN and
+    // ±Infinity passed through), first-max tie-break replicating
+    // array_position(arr, array_max(arr)) under Spark's double ordering
+    // (NaN above everything and equal to itself, -0.0 == 0.0).
     val dim = if (centroids.isEmpty) 0 else centroids(0).length
     val assignUdf = udf { (v: Seq[java.lang.Float]) =>
       // null / length-mismatched / null-element vectors: the old
@@ -158,9 +160,13 @@ object Ann {
           val c = centroids(l)
           var acc = 0.0; var i = 0
           while (i < dim) { acc += v(i).doubleValue * c(i); i += 1 }
-          val r = java.math.BigDecimal.valueOf(acc)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (r > bestVal) { bestVal = r; bestIdx = l }
+          val r =
+            if (acc.isNaN || acc.isInfinite) acc
+            else java.math.BigDecimal.valueOf(acc)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+          if (r != bestVal && java.lang.Double.compare(r, bestVal) > 0) {
+            bestVal = r; bestIdx = l
+          }
           l += 1
         }
         (bestIdx, bestVal)

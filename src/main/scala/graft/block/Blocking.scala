@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.ops.Skew
 
 /**
  * Blocking-key generation: normalized-domain keys + MinHash-LSH token
@@ -14,8 +15,10 @@ import org.apache.spark.sql.types._
  *
  * Scale design (100 TB): key generation is a narrow map; the only shuffle
  * is the explode+self-join downstream. Skewed blocks (mega-hosts, common
- * shingle bands) are (a) salted via `saltKey`, and (b) hard-capped per
- * block with the cap surfaced in a metrics table — no silent drops.
+ * shingle bands) are (a) salted via `saltKey`, and (b) split
+ * (`splitOversizedBlocks`) or hard-capped (`TopK.perKeyWithDrops`) per
+ * block with the split or cap surfaced in a metrics table — no silent
+ * drops.
  */
 object Blocking {
 
@@ -89,32 +92,6 @@ object Blocking {
   def saltKey(key: Column, id: Column, salts: Int): Column =
     concat_ws("#", key, pmod(xxhash64(id), lit(salts)).cast(StringType))
 
-  /** Cap rows per block at `cap` (deterministic by `orderCol`), returning
-    * (kept, dropCounts) — dropCounts is a small metrics table
-    * (block_key, n_total, n_dropped) for every truncated block.
-    *
-    * Skew-aware plan: a naive per-block row_number would shuffle + sort
-    * the ENTIRE input, even though capping only ever bites the hot
-    * blocks. The hot key set is found with one slim aggregation
-    * (map-side partials collapse to distinct keys per partition) and
-    * COUNTED eagerly (one cheap job), then:
-    *  - 0 hot keys (the common case): the input passes through untouched;
-    *  - ≤ `maxHotKeysBroadcast`: BROADCAST — cold rows pass through a
-    *    broadcast anti-join untouched, only hot-block rows pay the window
-    *    sort, and the input at large never exchanges;
-    *  - more (a boilerplate-heavy corpus where over-cap keys are
-    *    data-dependent, not few): forcing the broadcast would collect an
-    *    unbounded key set to the driver and OOM, so fall back to the
-    *    window-over-everything plan — slower (one full shuffle + sort)
-    *    but bounded. */
-  def capBlocks(df: DataFrame, keyCol: String, orderCol: String, cap: Int,
-      maxHotKeysBroadcast: Int = 1000000): (DataFrame, DataFrame) =
-    // one audited hot/cold implementation — null-safe joins, eager hot
-    // count, broadcast-threshold fallback — shared with the crawl-budget
-    // operator (graft.ops.TopK)
-    graft.ops.TopK.perKeyWithDrops(df, col(keyCol), keyCol,
-      Seq(col(orderCol)), cap, maxHotKeysBroadcast)
-
   /** Exact set fingerprint of a token array (order-insensitive): the
     * cheap key family that guarantees recall for records whose normalized
     * token sets are identical, independent of LSH geometry. */
@@ -128,54 +105,31 @@ object Blocking {
     * bounds per-block pair cost at ~cap² without silent row drops —
     * returns (rekeyed, splitStats(block_key, n_total, n_subblocks)). */
   def splitOversizedBlocks(df: DataFrame, keyCol: String, groupCol: String,
-      cap: Int, maxHotKeysBroadcast: Int = 1000000): (DataFrame, DataFrame) = {
-    // Skew-aware plan (same hot/cold discipline as capBlocks/TopK): the
-    // previous count-over-window formulation shuffled AND sorted the
-    // ENTIRE blocked table just to learn per-block sizes, even though
-    // splitting only ever bites the over-cap blocks. Block sizes are a
-    // slim partial aggregation; the (usually tiny, often empty) over-cap
-    // key set is counted eagerly and BROADCAST back, so the blocked table
+      cap: Int, maxHotKeysBroadcast: Int = Skew.MaxHotKeysBroadcast)
+      : (DataFrame, DataFrame) = {
+    // Hot/cold plan (Skew.hotKeys): splitting only bites the over-cap
+    // blocks, so their sizes are broadcast back and the blocked table
     // itself never exchanges here — its only shuffle stays the candidate
-    // join downstream. Null-safe `<=>`: a null block key is a group too.
-    // Unbounded over-cap key sets (boilerplate corpora) fall back to the
-    // windowed plan rather than collecting an unbounded broadcast.
-    val sizes = df.groupBy(col(keyCol)).agg(count(lit(1)).as("_bn"))
-    val hotPlan = sizes.where(col("_bn") > cap)
-    // ONE eager job decides the branch AND captures the over-cap keys:
-    // re-aggregating the sizes for the broadcast build and again for the
-    // stats arm would re-run the (caller-materialized) scan twice more.
-    val hotRows = hotPlan.limit(maxHotKeysBroadcast + 1).collect()
-    val nHot = hotRows.length
-    if (nHot <= maxHotKeysBroadcast) {
-      val hotDf = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(hotRows: _*), hotPlan.schema)
-      val stats = hotDf.select(col(keyCol), col("_bn").as("n_total"),
-        ceil(col("_bn").cast("double") / cap).cast("long").as("n_subblocks"))
-      val rekeyed =
-        if (nHot == 0) df
-        else df.join(
-            broadcast(hotDf.select(col(keyCol).as("_hk"), col("_bn"))),
-            col(keyCol) <=> col("_hk"), "left")
-          .withColumn("_k", ceil(col("_bn").cast("double") / cap).cast("long"))
-          .withColumn(keyCol,
-            when(col("_k").isNull || col("_k") <= 1, col(keyCol))
-              .otherwise(xxhash64(col(keyCol), pmod(col(groupCol), col("_k")))))
-          .drop("_hk", "_bn", "_k")
-      (rekeyed, stats)
-    } else {
-      // unbounded over-cap key set: fall back to lazy lineage for both
-      // the windowed rekeying and the stats arm
-      val stats = hotPlan.select(col(keyCol), col("_bn").as("n_total"),
-        ceil(col("_bn").cast("double") / cap).cast("long").as("n_subblocks"))
-      val w = Window.partitionBy(col(keyCol))
-      val rekeyed = df.withColumn("_bn", count(lit(1)).over(w))
-        .withColumn("_k", ceil(col("_bn").cast("double") / cap).cast("long"))
-        .withColumn(keyCol,
-          when(col("_k") <= 1, col(keyCol))
-            .otherwise(xxhash64(col(keyCol), pmod(col(groupCol), col("_k")))))
-        .drop("_bn", "_k")
-      (rekeyed, stats)
+    // join downstream. Past the bound, block sizes come from a window.
+    val (sizes, nHot) = Skew.hotKeys(df, keyCol, cap, maxHotKeysBroadcast)
+    def subBlocks(n: Column) = ceil(n.cast("double") / cap).cast("long")
+    val stats = sizes.select(col(keyCol), col("n_total"),
+      subBlocks(col("n_total")).as("n_subblocks"))
+    def rekey(withSize: DataFrame) = withSize
+      .withColumn("_k", subBlocks(col("_bn")))
+      .withColumn(keyCol,
+        when(col("_k").isNull || col("_k") <= 1, col(keyCol))
+          .otherwise(xxhash64(col(keyCol), pmod(col(groupCol), col("_k")))))
+      .drop("_hk", "_bn", "_k")
+    val rekeyed = nHot match {
+      case Some(0) => df
+      case Some(_) => rekey(df.join(
+        broadcast(sizes.select(col(keyCol).as("_hk"), col("n_total").as("_bn"))),
+        col(keyCol) <=> col("_hk"), "left"))
+      case None =>
+        rekey(df.withColumn("_bn", count(lit(1)).over(Window.partitionBy(col(keyCol)))))
     }
+    (rekeyed, stats)
   }
 
   /** Candidate pairs from a blocked table: self-join within block key with

@@ -155,9 +155,10 @@ object Dedup {
     * index table, not even sorted). Corpus TEXT is touched exactly once,
     * by an id-equi-join that attaches shingles to verified candidates
     * only. A degenerate hot band (boilerplate) fans the whole corpus to
-    * one increment row: `blockCap` bounds index rows per block with the
-    * drop count SURFACED via the returned stats table, mirroring the
-    * stream-static discipline (Streaming.capCorpusBlocks).
+    * one increment row: `blockCap` bounds index rows per block
+    * (`TopK.perKeyWithDrops`) with the drop count SURFACED via the
+    * returned stats table, mirroring the stream-static discipline
+    * (Streaming.capCorpusBlocks).
     *
     * Set `broadcastIncrement = false` when the "increment" is a backfill
     * comparable in size to the corpus — the join then degrades to the
@@ -175,9 +176,9 @@ object Dedup {
       col("tokens"), bands, rowsPerBand).select("block_key", "inc_id")
     val incBlocks =
       if (broadcastIncrement) broadcast(incBlocks0) else incBlocks0
-    val (cappedIndex, drops) = Blocking.capBlocks(
+    val (cappedIndex, drops) = graft.ops.TopK.perKeyWithDrops(
       corpusIndex.select(col("block_key"), col("id").as("corpus_id")),
-      "block_key", "corpus_id", blockCap)
+      col("block_key"), "block_key", Seq(col("corpus_id")), blockCap)
     val candidates = cappedIndex.join(incBlocks, Seq("block_key"))
       .select(col("inc_id"), col("corpus_id"))
       .dropDuplicates("inc_id", "corpus_id")

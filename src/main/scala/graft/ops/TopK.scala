@@ -11,21 +11,14 @@ import org.apache.spark.sql.functions._
  *
  * A naive `row_number().over(partitionBy(key))` sorts EVERY key's rows,
  * and a single mega-host (every web crawl has one) serializes into one
- * task's sort. [[perKeyWithDrops]] is the ONE audited implementation of
- * the hot/cold split (`Blocking.capBlocks` delegates here): a slim
- * aggregation finds the over-budget keys and counts them eagerly, then
+ * task's sort. [[perKeyWithDrops]] takes the over-budget keys from
+ * [[Skew.hotKeys]] (the one hot/cold decision, whose scaladoc holds the
+ * null-safety, bound and materialized-input contract), then
  *
  *  - 0 hot keys (the common case): input passes through untouched;
- *  - ≤ `maxHotKeysBroadcast`: cold rows stream through a broadcast
- *    anti-join untouched; only hot-key rows pay the window sort;
- *  - more (over-budget keys are data-dependent, not few): broadcasting
- *    would collect an unbounded key set to the driver, so fall back to
- *    the window-over-everything plan — slower but bounded.
- *
- * Joins are null-SAFE (`<=>`): groupBy counts null keys as one group, so
- * a hot null key (crawl rows with no parsed host are common) must route
- * to the window branch too — a plain equi-join would silently pass every
- * null-key row through uncapped.
+ *  - collected hot keys: cold rows stream through a broadcast anti-join
+ *    untouched; only hot-key rows pay the window sort;
+ *  - past the bound: the window-over-everything plan.
  *
  * Ordering must be total and deterministic (break ties on a unique key)
  * or the kept set is nondeterministic under retries.
@@ -40,21 +33,17 @@ object TopK {
     *                 but must not hold a DIFFERENT column under that name
     * @param orderBy  deterministic total order; first = most preferred */
   def perKeyWithDrops(df: DataFrame, key: Column, keyName: String,
-      orderBy: Seq[Column], k: Int, maxHotKeysBroadcast: Int = 1000000)
+      orderBy: Seq[Column], k: Int,
+      maxHotKeysBroadcast: Int = Skew.MaxHotKeysBroadcast)
       : (DataFrame, DataFrame) = {
     require(k > 0, "k must be positive")
     val keyed = df.withColumn(keyName, key)
-    val sizes = keyed.groupBy(col(keyName)).agg(count(lit(1)).as("n_total"))
-      .where(col("n_total") > k)
+    val (sizes, nHot) = Skew.hotKeys(keyed, keyName, k, maxHotKeysBroadcast)
     val drops = sizes.withColumn("n_dropped", col("n_total") - k)
     val w = Window.partitionBy(col(keyName)).orderBy(orderBy: _*)
-    // limit(max+1).count(): decides the branch without counting past the
-    // threshold; re-running the slim agg in the kept branch is cheaper
-    // than persisting it from library code
-    val nHot = sizes.limit(maxHotKeysBroadcast + 1).count()
-    val kept =
-      if (nHot == 0L) keyed
-      else if (nHot <= maxHotKeysBroadcast) {
+    val kept = nHot match {
+      case Some(0) => keyed
+      case Some(_) =>
         val hotKeys = broadcast(sizes.select(col(keyName).as("_hk")))
         val cold = keyed.join(hotKeys, col(keyName) <=> col("_hk"), "left_anti")
         val hotCapped =
@@ -62,8 +51,9 @@ object TopK {
             .withColumn("_rn", row_number().over(w))
             .where(col("_rn") <= k).drop("_rn")
         cold.unionByName(hotCapped)
-      } else keyed.withColumn("_rn", row_number().over(w))
+      case None => keyed.withColumn("_rn", row_number().over(w))
         .where(col("_rn") <= k).drop("_rn")
+    }
     (kept, drops)
   }
 

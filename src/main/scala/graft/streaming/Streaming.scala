@@ -78,18 +78,19 @@ object Streaming {
     * stream side computes its block keys independently, so a re-keyed
     * corpus sub-block would never collide with a streamed page's key
     * again. Instead the corpus keeps its keys and caps rows per block
-    * deterministically (lowest ids win), bounding the fan-out of a
-    * degenerate hot key (e.g. an empty post-stoplist token set) to `cap`
-    * corpus rows per streamed page. Returns (capped slim corpus rows,
-    * drop-stats table (block_key, n_total, n_dropped)) — drops are
-    * surfaced, never silent. Production callers should persist the capped
-    * side (it is re-evaluated per micro-batch otherwise) and sink the
-    * stats next to the batch pipeline's cap_drops. */
+    * deterministically (lowest ids win, `TopK.perKeyWithDrops`),
+    * bounding the fan-out of a degenerate hot key (e.g. an empty
+    * post-stoplist token set) to `cap` corpus rows per streamed page.
+    * Returns (capped slim corpus rows, drop-stats table (block_key,
+    * n_total, n_dropped)) — drops are surfaced, never silent.
+    * Production callers should persist the capped side (it is
+    * re-evaluated per micro-batch otherwise) and sink the stats next to
+    * the batch pipeline's cap_drops. */
   def capCorpusBlocks(corpusBlocked: DataFrame, cap: Int)
       : (DataFrame, DataFrame) =
-    graft.block.Blocking.capBlocks(
+    graft.ops.TopK.perKeyWithDrops(
       corpusBlocked.select(col("block_key"), col("id")),
-      "block_key", "id", cap)
+      col("block_key"), "block_key", Seq(col("id")), cap)
 
   /** @param assumeCapped the caller already ran [[capCorpusBlocks]] (and
     *   ideally persisted the result — StreamingIngestApp does): skip the

@@ -150,16 +150,41 @@ class AnnSpec extends SparkSuite {
   }
 
   test("kmeansAssign: declarative twin matches nearestList; zero shuffle") {
-    val emb = fixture(60, 32)
-    val cents = Ann.trainIvfCentroids(emb, nlist = 6, lloydIters = 2)
+    val train = fixture(60, 32)
+    val cents = Ann.trainIvfCentroids(train, nlist = 6, lloydIters = 2)
+    // non-finite vectors: NaN makes every dot NaN; ±Inf in one dimension
+    // makes the dots ±Inf — Spark's round passes both through
+    val v0 = train.where($"vec_id" === 0L).select($"embedding")
+      .as[Array[Float]].head()
+    val emb = train.union(Seq(
+      (-1L, v0.updated(3, Float.NaN)),
+      (-2L, v0.updated(0, Float.PositiveInfinity)),
+      (-3L, v0.updated(0, Float.NegativeInfinity))).toDF("vec_id", "embedding"))
+    // dots compared as bits: NaN == NaN, Inf and the 6-place grid exact
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
     val a = Ann.kmeansAssign(emb, cents)
-      .select($"vec_id", $"topic").as[(Long, Long)].collect().toMap
+      .select($"vec_id", $"topic", $"dot").as[(Long, Long, Double)].collect()
+      .map { case (id, t, d) => id -> (t, bits(d)) }.toMap
     val b = emb.select($"vec_id",
         Ann.nearestList($"embedding", cents).cast("long").as("topic"))
       .as[(Long, Long)].collect().toMap
-    assert(a === b)
-    assert(a.size === 120) // every vector assigned exactly once
-    assert(a.values.toSet.size > 1, "degenerate single-topic clustering")
+    assert(a.map { case (id, (t, _)) => id -> t } === b)
+    // the declarative formulation: per-centroid left-fold dot rounded to
+    // 6 places, first max under Spark's double ordering (NaN highest)
+    val dots = transform(typedLit(cents.map(_.toSeq).toSeq), c =>
+      round(aggregate(zip_with($"embedding", c, (x, y) => x.cast("double") * y),
+        lit(0.0), (acc, x) => acc + x), 6))
+    val want = emb.select($"vec_id",
+        (array_position(dots, array_max(dots)) - 1).as("topic"),
+        array_max(dots).as("dot"))
+      .as[(Long, Long, Double)].collect()
+      .map { case (id, t, d) => id -> (t, bits(d)) }.toMap
+    assert(a === want)
+    assert(a(-1L)._2 === bits(Double.NaN))
+    assert(Set(a(-2L)._2, a(-3L)._2).subsetOf(
+      Set(bits(Double.PositiveInfinity), bits(Double.NegativeInfinity))))
+    assert(a.size === 123) // every vector assigned exactly once
+    assert(a.values.map(_._1).toSet.size > 1, "degenerate single-topic clustering")
     val plan = Ann.kmeansAssign(emb, cents)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)

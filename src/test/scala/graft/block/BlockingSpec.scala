@@ -1,6 +1,8 @@
 package graft.block
 
 import graft.SparkSuite
+import graft.ops.{Skew, TopK}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +15,16 @@ class BlockingSpec extends SparkSuite {
     (0 until 500).flatMap(k => (0 to k % 3).map(j => (s"cold$k", (10000 + k * 10 + j).toLong)))
   ).toDF("block_key", "id")
 
-  test("capBlocks == naive per-block window cap, with exact drop stats") {
+  // block caps go through the crawl-budget operator: key = block_key,
+  // lowest ids win
+  private def blockCap(df: DataFrame, cap: Int,
+      maxHotKeysBroadcast: Int = Skew.MaxHotKeysBroadcast) =
+    TopK.perKeyWithDrops(df, $"block_key", "block_key", Seq($"id"), cap,
+      maxHotKeysBroadcast)
+
+  test("block cap == naive per-block window cap, with exact drop stats") {
     val df = blocked()
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (kept, drops) = blockCap(df, cap = 100)
     val naive = df.withColumn("_rn", row_number().over(
         Window.partitionBy($"block_key").orderBy($"id")))
       .where($"_rn" <= 100).drop("_rn")
@@ -26,9 +35,9 @@ class BlockingSpec extends SparkSuite {
     assert(d.toSeq === Seq(("hot", 1000L, 900L)))
   }
 
-  test("capBlocks plan: hot keys broadcast; cold majority skips the window") {
+  test("block cap plan: hot keys broadcast; cold majority skips the window") {
     val df = blocked()
-    val (kept, _) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (kept, _) = blockCap(df, cap = 100)
     val plan = kept.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     // the window sort must sit under the hot-side branch only: exactly
@@ -36,32 +45,40 @@ class BlockingSpec extends SparkSuite {
     assert("(?s)Window".r.findAllIn(plan).size >= 1)
   }
 
-  test("capBlocks caps a hot NULL key like the window twin (null-safe join)") {
+  test("block cap caps a hot NULL key like the window twin (null-safe join)") {
     val df = ((0 until 300).map(i => (null: String, i.toLong)) ++
       (0 until 10).map(i => ("k", (1000 + i).toLong))).toDF("block_key", "id")
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 50)
+    val (kept, drops) = blockCap(df, cap = 50)
     assert(kept.count() === 60L) // 50 capped nulls + 10 cold rows
     val d = drops.as[(Option[String], Long, Long)].collect()
     assert(d.toSeq === Seq((None, 300L, 250L)))
   }
 
-  test("capBlocks over the broadcast bound falls back to the window plan, same rows") {
+  test("block cap over the broadcast bound falls back to the window plan, same rows") {
     val df = blocked()
     val (kept, drops) =
-      Blocking.capBlocks(df, "block_key", "id", cap = 100,
-        maxHotKeysBroadcast = 0) // force: 1 hot key > bound
+      blockCap(df, cap = 100, maxHotKeysBroadcast = 0) // force: 1 hot key > bound
     val plan = kept.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin"), plan)
-    val (keptB, dropsB) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (keptB, dropsB) = blockCap(df, cap = 100)
     assert(kept.exceptAll(keptB).count() === 0L)
     assert(keptB.exceptAll(kept).count() === 0L)
     assert(drops.as[(String, Long, Long)].collect().toSeq ===
       dropsB.as[(String, Long, Long)].collect().toSeq)
+    // exactly at the bound (1 hot key == bound) the keys still broadcast,
+    // and the rows match the windowed twin
+    val (keptE, dropsE) = blockCap(df, cap = 100, maxHotKeysBroadcast = 1)
+    val planE = keptE.queryExecution.executedPlan.toString
+    assert(planE.contains("BroadcastHashJoin"), planE)
+    assert(kept.exceptAll(keptE).count() === 0L)
+    assert(keptE.exceptAll(kept).count() === 0L)
+    assert(drops.as[(String, Long, Long)].collect().toSeq ===
+      dropsE.as[(String, Long, Long)].collect().toSeq)
   }
 
-  test("capBlocks with no oversized block is a row-preserving no-op") {
+  test("block cap with no oversized block is a row-preserving no-op") {
     val df = (0 until 100).map(i => (s"k${i % 20}", i.toLong)).toDF("block_key", "id")
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 50)
+    val (kept, drops) = blockCap(df, cap = 50)
     assert(kept.count() === 100L)
     assert(drops.count() === 0L)
   }
@@ -115,6 +132,17 @@ class BlockingSpec extends SparkSuite {
     assert(splitB.exceptAll(split).count() === 0L)
     assert(stats.collect().map(_.toSeq).toSet ===
       statsB.collect().map(_.toSeq).toSet)
+    // exactly at the bound (3 hot keys == bound) the sizes still
+    // broadcast, and the rows match the windowed twin
+    val (splitE, statsE) = Blocking.splitOversizedBlocks(df, "block_key",
+      "fp", cap = 64, maxHotKeysBroadcast = 3)
+    val planE = splitE.queryExecution.executedPlan.toString
+    assert(planE.contains("BroadcastHashJoin"), planE)
+    val expected = windowedSplit(df, "block_key", "fp", cap = 64)
+    assert(splitE.exceptAll(expected).count() === 0L)
+    assert(expected.exceptAll(splitE).count() === 0L)
+    assert(statsE.collect().map(_.toSeq).toSet ===
+      stats.collect().map(_.toSeq).toSet)
   }
 
   test("splitOversizedBlocks with no oversized block passes rows through untouched") {

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
@@ -57,6 +59,19 @@ class TopKSpec extends SparkSuite {
         Seq($"score".desc, $"id".asc), 4)
       .select("id").as[Long].collect().sorted.toSeq
     assert(a === b)
+  }
+
+  test("broadcast branch: kept and drops re-run no size aggregate; drops is local") {
+    val (kept, drops) = TopK.perKeyWithDrops(corpus, $"host", "host",
+      Seq($"score".desc, $"id".asc), k = 5)
+    def aggregates(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    assert(kept.queryExecution.executedPlan.toString
+      .contains("BroadcastHashJoin"))
+    assert(aggregates(kept).isEmpty, kept.queryExecution.optimizedPlan)
+    assert(aggregates(drops).isEmpty, drops.queryExecution.optimizedPlan)
+    assert(drops.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      drops.queryExecution.optimizedPlan)
   }
 
   test("only the hot slice reaches the window sort") {

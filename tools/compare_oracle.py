@@ -5,6 +5,8 @@ Usage: compare_oracle.py <sf_dir> <verify_out_dir> [query ...]
 Registers every <sf_dir>/*.parquet as a view named after the table, runs
 each oracle SQL from <verify_out_dir>/oracle_sql.json, and compares with
 the Spark result parquet (column-name-sorted, row-sorted, dtype-aware).
+Ends with `ALL OK` and exit 0, or `N MISMATCHES` and exit 1 when any query
+mismatches, has no Spark output or its oracle SQL fails.
 """
 import sys, json, glob, os
 import duckdb
@@ -17,6 +19,8 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 def main():
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()
@@ -24,12 +28,14 @@ def main():
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    bad = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
         spark_path = f"{out_dir}/{name}"
         if not os.path.isdir(spark_path):
             print(f"{name}: NO SPARK OUTPUT")
+            bad += 1
             continue
         s = con.execute(
             f"SELECT * FROM read_parquet('{spark_path}/*.parquet')").df()
@@ -37,6 +43,7 @@ def main():
             o = con.execute(sql).df()
         except Exception as e:
             print(f"{name}: ORACLE SQL ERROR: {e}")
+            bad += 1
             continue
         s, o = canon(s), canon(o)
         problems = []
@@ -50,17 +57,22 @@ def main():
                     f"dtypes spark={list(map(str, s.dtypes))} oracle={list(map(str, o.dtypes))}")
             if not s.equals(o):
                 diff = (s != o) & ~(s.isna() & o.isna())
-                bad = diff.any(axis=1)
-                n = int(bad.sum())
+                differs = diff.any(axis=1)
+                n = int(differs.sum())
                 if n:
                     problems.append(f"{n} differing rows; first:")
-                    idx = bad[bad].index[:3]
+                    idx = differs[differs].index[:3]
                     for i in idx:
                         problems.append(f"  spark : {s.loc[i].to_dict()}")
                         problems.append(f"  oracle: {o.loc[i].to_dict()}")
+                elif not problems:
+                    problems.append("values differ (DataFrame.equals is False)")
         print(f"{name}: {'OK' if not problems else 'MISMATCH'}")
         for p_ in problems:
             print("   ", p_)
+        bad += bool(problems)
+    print("ALL OK" if bad == 0 else f"{bad} MISMATCHES")
+    return 1 if bad else 0
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
